@@ -8,6 +8,8 @@ independent re-expressions.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -131,12 +133,18 @@ def json_int_field(col: Column | str, key: str) -> Column:
 
     ``get_json_object`` spins up a Jackson parser per value: measured
     2.1s for 1M tiny objects at local[32]; the anchored regex does the
-    identical extraction in 0.4s (5x) with the same null semantics
-    (missing key / null input / non-integer value -> null, via the
-    empty-match int cast). NOT valid for nested documents — a nested
-    ``"key":`` would match first; use ``get_json_object`` there."""
+    identical extraction in 0.4s (5x). Null semantics: a missing key,
+    a null input, a non-integral value (``1.5``, ``1e3``, a string) or
+    one outside the int range -> null (``try_cast`` of the empty match,
+    so ANSI mode does not raise). The key is matched literally (regex
+    metacharacters escaped) and only where a member name can start —
+    right after ``{`` or ``,`` — so a ``\\"key\\":`` inside a string
+    value never matches. NOT valid for nested documents — a nested
+    object's ``"key":`` would match first; use ``get_json_object``
+    there."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, f'"{key}":\\s*(-?\\d+)', 1).cast("int")
+    pattern = r'[{,]\s*"' + re.escape(key) + r'"\s*:\s*(-?\d+)(?![.\deE])'
+    return F.regexp_extract(c, pattern, 1).try_cast("int")
 
 
 def coalesce_default(col: Column | str, default) -> Column:

@@ -11,16 +11,31 @@ the skip happens at FILE granularity before any Spark scan starts).
 Hashing stays ENTIRELY JVM-side: the two 64-bit limbs feeding the
 double-hashing scheme are `xxhash64(key_cols)` and
 `xxhash64(lit(1), key_cols)`, computed by Spark on both the build path
-(column-pruned scan + groupBy input_file_name; pandas only sets bits,
-vectorized) and the probe path (the same 1-row job `lookup` already
-runs for its bucket id). False negatives are impossible — both sides
-evaluate the identical expression — and any hash-collision class only
-inflates the false-positive rate, which costs one extra file read.
+and the probe path (the constant-folded probe `lookup` evaluates for
+its bucket id). Probe j of k sets bit
+
+    pos_j = pmod(pmod(h1, n) + j * pmod(h2 | 1, n), n)
+
+of an n-bit filter. Every term stays below 2^41 for n < 2^32 and
+k <= 255, so the arithmetic never overflows — Spark's ANSI mode would
+raise on an overflowing long expression. The build is one JVM
+aggregate with no pandas or Python-worker stage: a column-pruned scan
+of the files lacking a sidecar, `explode(sequence(0, k-1))` for the
+probe indices, and `bit_or(1L << (pos & 63))` grouped by
+(file, pos >> 6) for the 64-bit bitmap words; the driver lays the words
+out little-endian (`_positions` is the same formula for the probe).
+False negatives are impossible — both sides evaluate the identical
+expressions — and any hash-collision class only inflates the
+false-positive rate, which costs one extra file read.
 
 Sidecars are content-deterministic functions of immutable data files,
-so they need no versioning or commit protocol: existence == usable,
-missing == conservative full read. Built by `LakeTable.build_blooms`,
-swept by `vacuum` when the data file is gone.
+so they need no commit protocol: a valid sidecar == usable, a missing
+or unreadable one == conservative full read. The format is versioned
+twice — the `LBF2` magic and the `.lbf2.bloom` name — so a sidecar in
+an older position layout (`LBF1`) is never consulted: it reads as
+missing, `build_blooms` rebuilds it, and `vacuum` sweeps the stale name.
+Built by `LakeTable.build_blooms`, swept by `vacuum` when the data file
+is gone.
 
 Scale: 10 bits/key + 7 probes ≈ 0.8% false-positive rate; a 1M-row
 128 MB parquet file costs a 1.25 MB sidecar (~1% overhead) and a
@@ -35,7 +50,8 @@ import struct
 
 import numpy as np
 
-_MAGIC = b"LBF1"
+_MAGIC = b"LBF2"
+_SUFFIX = ".lbf2.bloom"
 BLOOM_SEED = 1  # second-limb xxhash64 seed literal
 
 
@@ -51,17 +67,43 @@ def bloom_hash_cols(key_cols: list[str]):
     )
 
 
-def _positions(h1: np.ndarray, h2: np.ndarray, k: int, n_bits: int) -> np.ndarray:
-    """(n, k) bit positions via double hashing. int64 wraparound + a
-    floored mod — any deterministic map works as long as the build and
-    probe sides agree (both call THIS function on the same JVM-computed
-    limbs), and int64 avoids numpy's slow uint64 modulo path."""
-    a1 = np.asarray(h1, dtype=np.int64)[:, None]
-    a2 = (np.asarray(h2, dtype=np.int64) | np.int64(1))[:, None]
-    j = np.arange(k, dtype=np.int64)[None, :]
-    with np.errstate(over="ignore"):
-        mixed = a1 + j * a2
-    return mixed % np.int64(max(n_bits, 1))
+def n_bits_for(rows: int, bits_per_key: int) -> int:
+    """A file's filter size, from its footer row count."""
+    return max(64, rows * int(bits_per_key))
+
+
+def bloom_words(hashed, k: int):
+    """The build aggregate. ``hashed`` has one row per key:
+    ``__file``, ``__n`` (the file's bit count, a long) and the limbs
+    ``__bh1``/``__bh2``. Returns one row per set 64-bit word:
+    ``(__file, __word, __bits)`` — `_positions`' formula, JVM-side."""
+    from pyspark.sql import functions as F
+
+    n = F.col("__n")
+    probes = hashed.select(
+        "__file", "__n", "__bh1", "__bh2",
+        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(k - 1).cast("long")))
+        .alias("__j"),
+    )
+    pos = F.pmod(
+        F.pmod(F.col("__bh1"), n)
+        + F.col("__j") * F.pmod(F.col("__bh2").bitwiseOR(F.lit(1)), n),
+        n,
+    )
+    return (
+        probes.select("__file", pos.alias("__pos"))
+        .groupBy(F.col("__file"), F.shiftright("__pos", 6).alias("__word"))
+        .agg(F.expr("bit_or(shiftleft(1L, CAST(__pos & 63 AS INT)))").alias("__bits"))
+    )
+
+
+def _positions(h1: int, h2: int, k: int, n_bits: int) -> np.ndarray:
+    """The k bit positions of one key: `bloom_words`' formula (see the
+    module docstring). Python ints never wrap, and Python's floored %
+    equals Spark's pmod for a positive modulus."""
+    n = max(n_bits, 1)
+    a, b = h1 % n, (h2 | 1) % n
+    return np.array([(a + j * b) % n for j in range(k)], dtype=np.int64)
 
 
 class FileBloom:
@@ -73,18 +115,18 @@ class FileBloom:
         self.k = k
 
     @classmethod
-    def build(
-        cls, h1: np.ndarray, h2: np.ndarray, bits_per_key: int = 10, k: int = 7
-    ) -> "FileBloom":
-        n_bits = max(64, len(h1) * int(bits_per_key))
-        pos = _positions(np.asarray(h1), np.asarray(h2), k, n_bits).ravel()
-        flags = np.zeros(((n_bits + 7) // 8) * 8, dtype=bool)
-        flags[pos] = True  # fancy assignment absorbs duplicates cheaply
-        bits = np.packbits(flags, bitorder="little")
+    def from_words(cls, words: list[int], values: list[int], n_bits: int,
+                   k: int) -> "FileBloom":
+        """Assemble the JVM-built 64-bit words (index, signed bits) into
+        the little-endian bitmap: bit p lands in byte p // 8 at bit
+        p % 8, exactly where word p >> 6's bit p & 63 sits."""
+        out = np.zeros((n_bits + 63) // 64, dtype="<i8")
+        out[np.asarray(words, dtype=np.int64)] = np.asarray(values, dtype=np.int64)
+        bits = np.frombuffer(out.tobytes()[: (n_bits + 7) // 8], dtype=np.uint8)
         return cls(bits, n_bits, k)
 
     def might_contain(self, h1: int, h2: int) -> bool:
-        pos = _positions(np.array([h1]), np.array([h2]), self.k, self.n_bits).ravel()
+        pos = _positions(int(h1), int(h2), self.k, self.n_bits)
         byte = self.bits[pos // 8]
         mask = np.left_shift(np.uint8(1), (pos % 8).astype(np.uint8))
         return bool(np.all(byte & mask))
@@ -95,7 +137,7 @@ class FileBloom:
     @classmethod
     def from_bytes(cls, raw: bytes) -> "FileBloom":
         if raw[:4] != _MAGIC:
-            raise ValueError("not a bloom sidecar")
+            raise ValueError("not a bloom sidecar of this format")
         n_bits, k = struct.unpack_from("<IB", raw, 4)
         bits = np.frombuffer(raw[9:], dtype=np.uint8)
         if bits.size != (n_bits + 7) // 8:
@@ -106,8 +148,14 @@ class FileBloom:
 def sidecar_name(data_file: str) -> str:
     """Stable sidecar filename for a data file path. Hash of the
     table-relative tail so the mapping survives table relocation."""
-    tail = "/".join(data_file.rstrip("/").split("/")[-3:])
-    return hashlib.sha1(tail.encode()).hexdigest() + ".bloom"
+    return hashlib.sha1(file_tail(data_file).encode()).hexdigest() + _SUFFIX
+
+
+def file_tail(data_file: str) -> str:
+    """The last three path segments — the part of a data file's path
+    that is the same whether it is spelled as a path or as the URI
+    Spark's `input_file_name` reports."""
+    return "/".join(data_file.rstrip("/").split("/")[-3:])
 
 
 def write_sidecar(bloom_dir: str, data_file: str, blob: bytes) -> None:
@@ -123,10 +171,19 @@ def write_sidecar(bloom_dir: str, data_file: str, blob: bytes) -> None:
     os.replace(tmp, dst)
 
 
+def has_sidecar(bloom_dir: str, data_file: str) -> bool:
+    """True when a sidecar of THIS format exists (header check only)."""
+    try:
+        with open(os.path.join(bloom_dir, sidecar_name(data_file)), "rb") as f:
+            return f.read(4) == _MAGIC
+    except FileNotFoundError:
+        return False
+
+
 def load_sidecar(bloom_dir: str, data_file: str) -> FileBloom | None:
     p = os.path.join(bloom_dir, sidecar_name(data_file))
     try:
         with open(p, "rb") as f:
             return FileBloom.from_bytes(f.read())
     except (FileNotFoundError, ValueError):
-        return None  # missing/corrupt sidecar -> conservative read
+        return None  # missing/corrupt/older-format sidecar -> conservative read

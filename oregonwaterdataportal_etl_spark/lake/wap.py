@@ -656,7 +656,12 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
                 intent[value] = {"pre": pre, "pub": pre + 1}
                 self._write_intent(intent)
                 pub = WapStage(self.partition_dir(value), self.wap_id).publish()
-                assert pub == pre + 1
+                if pub != pre + 1:
+                    raise RuntimeError(
+                        f"WAP publish of partition {value!r} committed "
+                        f"version {pub}, expected {pre + 1}: the recorded "
+                        "publish intent no longer matches the child table"
+                    )
                 vector[value] = pub
                 undo.append((value, pre, pub))
             snap["partitions"] = vector

@@ -52,6 +52,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark 4 captures a Python call site on EVERY DataFrame,
+        # Column and functions call (a conf read plus two JVM calls per
+        # call): most of a plan build's py4j round trips. The engine
+        # builds its plans programmatically, so the captured site is
+        # always a line inside the package. Off, an error loses only
+        # its `== DataFrame == "x" was called from` line; the JVM
+        # error, the SQL fragment and the Python traceback remain.
+        # Static conf: it must be set before the session starts.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Guide-baseline: let the planner pick shuffled-hash joins
         # where its size conditions hold (skips both per-task sorts a
         # sort-merge join pays). Interleaved bench draws read slightly

@@ -78,6 +78,37 @@ def test_strip_suffix_and_unit(spark):
     assert strcol(spark, "305m", scalar.numeric_prefix) == 305
 
 
+@pytest.mark.parametrize(
+    "doc, key, want",
+    [
+        ('{"k":42,"x":1}', "k", 42),
+        ('{"x":1, "k" : -7}', "k", -7),
+        ('{"x":1}', "k", None),  # missing key: null, never a cast error
+        (None, "k", None),
+        ('{"k":1.5}', "k", None),  # non-integral: null, not truncated
+        ('{"k":1e3}', "k", None),
+        ('{"k":"12"}', "k", None),  # a string value is not an int
+        ('{"k":99999999999}', "k", None),  # outside int range
+        ('{"s":"a\\"k\\":5","k":3}', "k", 3),  # in-string key skipped
+        ('{"s":"x, \\"k\\":5"}', "k", None),
+        ('{"a.b":1,"axb":2}', "a.b", 1),  # regex metacharacters literal
+        ('{"axb":2}', "a.b", None),
+        ('{"k+":4,"k":5}', "k+", 4),
+        ('{"k[0]":6}', "k[0]", 6),
+    ],
+)
+def test_json_int_field(spark, doc, key, want):
+    """Flat-object extract: null for a missing key, a non-integral value
+    or an in-string occurrence; the key matched literally. Nested
+    objects stay out of scope (documented limitation)."""
+    got = (
+        spark.createDataFrame([(doc,)], "s string")
+        .select(scalar.json_int_field("s", key).alias("v"))
+        .collect()[0]["v"]
+    )
+    assert got == want
+
+
 def test_coords_conditional(spark):
     df = spark.createDataFrame([(1.0, 2.0, 30), (3.0, 4.0, None)], ["lon", "lat", "el"])
     out = df.select(scalar.coords("lon", "lat", "el").alias("c")).collect()

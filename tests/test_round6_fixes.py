@@ -16,6 +16,7 @@ from oregonwaterdataportal_etl_spark.lake import (
     WapConflictError,
 )
 from oregonwaterdataportal_etl_spark.lake.table import CommitConflictError
+from oregonwaterdataportal_etl_spark.lake.wap import WapStage
 
 SCHEMA = T.StructType(
     [
@@ -113,6 +114,24 @@ def test_tree_publish_crash_before_root_commit_resumes(
     for name in os.listdir(str(tmp_path / "pt")):
         if name.startswith("p="):
             assert _wap_manifests(str(tmp_path / "pt" / name), "crashpub") == []
+
+
+def test_tree_publish_refuses_unexpected_child_version(
+    spark, tmp_path, monkeypatch
+):
+    """The intent marker records pub = pre + 1 before each child
+    publish; a child that lands anywhere else must stop the tree
+    publish with an explicit error (an assert would vanish under -O)."""
+    t = _create(tmp_path)
+    t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
+    stage = t.begin_wap("skewed")
+    stage.merge(_events(spark, [(1, 1, 10, "update", "a2")]))
+    real = WapStage.publish
+    monkeypatch.setattr(
+        WapStage, "publish", lambda self, *a, **k: real(self, *a, **k) + 1
+    )
+    with pytest.raises(RuntimeError, match="expected"):
+        stage.publish(spark)
 
 
 def test_tree_publish_crash_after_root_commit_is_idempotent(
